@@ -1,0 +1,1 @@
+"""Closed-loop benchmark of the engine; entry point ``perfbench/run.py``."""
