@@ -25,6 +25,7 @@ the measured block ALONE creates more stages than the retention window
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 
@@ -116,3 +117,17 @@ class measure_volumes:
     def __exit__(self, *exc):
         self.delta, _ = _collect(self._spark, self._floor)
         return False
+
+
+@contextmanager
+def job_description(spark, label: str):
+    """Label every job the enclosed block runs (``op:mode:step``, shown in
+    the status store and UI), then restore the caller's description — a
+    job group set around the block keeps its own label."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)

@@ -11,14 +11,14 @@ Spark-first design, one batch = one merge:
 
 - change detection is a hash-compare (``xxhash64`` over tracked columns) —
   no column-by-column predicate explosion, constant-cost at any width;
-- the merge is expressed as unions of three declarative branches
-  (unchanged-history ∪ closed-versions ∪ new-versions), all equi-joins on
-  the business key — Catalyst plans one shuffle per side, broadcastable
-  when the batch is small;
-- no driver-side loops; counts materialize before the swap (same
+- the merge is one full outer equi-join of the open versions against the
+  batch on the business key: a changed key emits its closed and its new
+  version from the same joined row, and closed history passes through
+  without joining;
+- no driver-side loops; counts are observed in the write job (same
   crash-recoverable rename-aside protocol as ``upsert._write_path``). On
-  Delta/Iceberg the same three branches collapse into one ``MERGE INTO``
-  with a ``WHEN MATCHED AND hash_differs`` clause.
+  Delta/Iceberg the same merge is one ``MERGE INTO`` with a
+  ``WHEN MATCHED AND hash_differs`` clause.
 
 Idempotence: re-merging the same batch is a no-op (hash equality short-
 circuits), so micro-batch retries through ``foreachBatch`` are safe.
@@ -30,8 +30,10 @@ import datetime as _dt
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from ..metrics import job_description
 
 #: sentinel for an open-ended version — comparable, sorts last, parquet-safe
 OPEN_END = "9999-12-31 23:59:59"
@@ -61,10 +63,6 @@ def _normalize_as_of(as_of: str) -> str:
         f"as_of {as_of!r} is not a recognizable timestamp; expected "
         "'YYYY-MM-DD[ HH:MM[:SS[.ffffff]]]' (T separator accepted)"
     )
-
-
-def scd2_columns(keys: list[str]) -> list[str]:
-    return list(keys) + ["valid_from", "valid_to", "is_current"]
 
 
 def _hash_cols(df: DataFrame, cols: list[str]) -> F.Column:
@@ -148,37 +146,47 @@ def scd2_merge(
                 "inverted validity intervals"
             )
 
-    joined = cur.alias("c").join(
-        b.select(*keys, "__bh").alias("n"), keys, "left"
-    )
-    unchanged = joined.where(
-        F.col("n.__bh").isNull() | (F.col("c.__ch") == F.col("n.__bh"))
-    ).select([F.col(f"c.{c}") for c in current.columns])
-    closed = (
-        joined.where(F.col("n.__bh").isNotNull() & (F.col("c.__ch") != F.col("n.__bh")))
-        .select([F.col(f"c.{c}") for c in current.columns])
-        .withColumn("valid_to", F.lit(as_of))
-        .withColumn("is_current", F.lit(False))
-    )
+    # One full outer join: open versions (c) against the batch (n). A
+    # joined row yields up to two versions — the current one (kept, or
+    # closed when the hashes differ) and a new open one (new or changed
+    # key) — through explode(array(c, n)) with the absent side NULL.
+    joined = cur.alias("c").join(b.alias("n"), keys, "full_outer")
+    in_c = F.col("c.__ch").isNotNull()
+    in_n = F.col("n.__bh").isNotNull()
+    changed = in_c & in_n & (F.col("c.__ch") != F.col("n.__bh"))
 
-    cur_h = cur.select(*keys, "__ch")
-    opened = (
-        b.alias("n")
-        .join(cur_h.alias("c"), keys, "left")
-        .where(F.col("c.__ch").isNull() | (F.col("c.__ch") != F.col("n.__bh")))
-        .select([F.col(f"n.{c}") for c in batch.columns])
-        .select(
-            "*",
-            F.lit(as_of).alias("valid_from"),
-            F.lit(OPEN_END).alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        )
+    def kept(c: str) -> F.Column:
+        if c in keys:
+            return F.col(c)
+        if c == "valid_to":
+            return F.when(changed, F.lit(as_of)).otherwise(F.col("c.valid_to"))
+        if c == "is_current":
+            return ~changed
+        return F.col(f"c.{c}")
+
+    opened = {
+        "valid_from": F.lit(as_of),
+        "valid_to": F.lit(OPEN_END),
+        "is_current": F.lit(True),
+    }
+    versions = F.array(
+        F.when(in_c, F.struct(*[kept(c).alias(c) for c in current.columns])),
+        F.when(
+            in_n & (~in_c | changed),
+            F.struct(
+                *[
+                    opened.get(c, F.col(c) if c in keys else F.col(f"n.{c}")).alias(c)
+                    for c in current.columns
+                ]
+            ),
+        ),
     )
-    return (
-        hist.unionByName(unchanged)
-        .unionByName(closed)
-        .unionByName(opened.select(*current.columns))
+    merged = (
+        joined.select(F.explode(versions).alias("__v"))
+        .where(F.col("__v").isNotNull())
+        .select("__v.*")
     )
+    return hist.unionByName(merged)
 
 
 class Scd2Sink:
@@ -232,12 +240,26 @@ class Scd2Sink:
         except OSError:
             return None
 
-    def write(
-        self, batch: DataFrame, spark: SparkSession, path: str, as_of: str
-    ) -> DataFrame:
-        if self.snapshot:
-            return self._write_snapshot(batch, spark, path, as_of)
-        current = spark.read.parquet(path) if os.path.exists(path) else None
+    def _write_hwm(self, path: str, value: str) -> None:
+        # Atomic sidecar update: write a temp file and os.replace() it so a
+        # crash mid-write leaves either the old or the new COMPLETE value,
+        # never a truncated prefix (a prefix like '2026-0' would compare <=
+        # later as_of values and wrongly enable the monotonic fast path).
+        hwm_path = self._hwm_path(path)
+        hwm_tmp = hwm_path + ".tmp"
+        with open(hwm_tmp, "w") as f:
+            f.write(value)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(hwm_tmp, hwm_path)
+        self._max_as_of = value
+
+    def _merge(
+        self, current: DataFrame | None, batch: DataFrame, path: str, as_of: str
+    ) -> tuple[DataFrame, Observation, str]:
+        """The merged history to write, with ``rows``/``open`` observed
+        inside the write job, and the high-water mark to persist once it
+        has landed."""
         as_of_norm = _normalize_as_of(as_of)
         disk_hwm = self._read_hwm(path) if current is not None else None
         monotonic = disk_hwm is not None and as_of_norm >= disk_hwm
@@ -249,9 +271,33 @@ class Scd2Sink:
             self.tracked,
             validate_as_of=not monotonic,
         )
-        n_total = merged.count()
-        n_open = merged.where(F.col("is_current")).count()
+        obs = Observation()
+        merged = merged.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.count_if(F.col("is_current")).alias("open"),
+        )
+        return merged, obs, max(as_of_norm, disk_hwm or as_of_norm)
 
+    def _landed(self, path: str, obs: Observation, hwm: str) -> None:
+        n = obs.get
+        self.last_stats = {"rows": n["rows"], "open": n["open"]}
+        self._write_hwm(path, hwm)
+
+    def write(
+        self, batch: DataFrame, spark: SparkSession, path: str, as_of: str
+    ) -> DataFrame:
+        mode = "snapshot" if self.snapshot else "path"
+        with job_description(spark, f"scd2:{mode}:merge"):
+            if self.snapshot:
+                return self._write_snapshot(batch, spark, path, as_of)
+            return self._write_path(batch, spark, path, as_of)
+
+    def _write_path(
+        self, batch: DataFrame, spark: SparkSession, path: str, as_of: str
+    ) -> DataFrame:
+        current = spark.read.parquet(path) if os.path.exists(path) else None
+        merged, obs, hwm = self._merge(current, batch, path, as_of)
         tmp = path + ".__scd2_tmp"
         merged.write.mode("overwrite").parquet(tmp)
         old = path + ".__scd2_old"
@@ -260,20 +306,7 @@ class Scd2Sink:
             os.rename(path, old)
         shutil.move(tmp, path)
         shutil.rmtree(old, ignore_errors=True)
-        self.last_stats = {"rows": n_total, "open": n_open}
-        new_hwm = max(as_of_norm, disk_hwm) if disk_hwm else as_of_norm
-        # Atomic sidecar update: write a temp file and os.replace() it so a
-        # crash mid-write leaves either the old or the new COMPLETE value,
-        # never a truncated prefix (a prefix like '2026-0' would compare <=
-        # later as_of values and wrongly enable the monotonic fast path).
-        hwm_path = self._hwm_path(path)
-        hwm_tmp = hwm_path + ".tmp"
-        with open(hwm_tmp, "w") as f:
-            f.write(new_hwm)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(hwm_tmp, hwm_path)
-        self._max_as_of = new_hwm
+        self._landed(path, obs, hwm)
         return spark.read.parquet(path)
 
     def _write_snapshot(
@@ -293,7 +326,6 @@ class Scd2Sink:
             snapshot_read,
         )
 
-        as_of_norm = _normalize_as_of(as_of)
         last_exc: Exception | None = None
         for _ in range(3):
             base_version = snapshot_current(root)
@@ -302,18 +334,7 @@ class Scd2Sink:
                 if base_version is not None
                 else None
             )
-            disk_hwm = self._read_hwm(root) if current is not None else None
-            monotonic = disk_hwm is not None and as_of_norm >= disk_hwm
-            merged = scd2_merge(
-                current,
-                batch,
-                self.keys,
-                as_of,
-                self.tracked,
-                validate_as_of=not monotonic,
-            )
-            n_total = merged.count()
-            n_open = merged.where(F.col("is_current")).count()
+            merged, obs, hwm = self._merge(current, batch, root, as_of)
             try:
                 name = snapshot_commit(
                     spark, root, merged, expect_version=base_version
@@ -321,16 +342,7 @@ class Scd2Sink:
             except SnapshotConflict as exc:
                 last_exc = exc
                 continue
-            self.last_stats = {"rows": n_total, "open": n_open}
-            new_hwm = max(as_of_norm, disk_hwm) if disk_hwm else as_of_norm
-            hwm_path = self._hwm_path(root)
-            hwm_tmp = hwm_path + ".tmp"
-            with open(hwm_tmp, "w") as f:
-                f.write(new_hwm)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(hwm_tmp, hwm_path)
-            self._max_as_of = new_hwm
+            self._landed(root, obs, hwm)
             return snapshot_read(spark, root, name)
         raise last_exc if last_exc is not None else RuntimeError(
             f"SCD2 snapshot merge into {root} did not commit"

@@ -37,7 +37,9 @@ Backends:
   partition-parallel. At cluster scale this is the JDBC-executor pattern;
   connection failure raises ``UnrecoverableOperationalError`` (fatal, O2a).
 - :class:`~..registry.PathService` — parquet-directory "table": MERGE
-  emulation by key-split + rewrite. On a real lakehouse target this is
+  emulation as one full outer join on the discriminant + rewrite; counts
+  are observed in the write job, not by re-running the merge. On a real
+  lakehouse target this is
   ``MERGE INTO`` (Delta/Iceberg); the parquet emulation keeps the exact
   same observable semantics for tests and local pipelines.
 """
@@ -48,7 +50,7 @@ import os
 import shutil
 from typing import Any, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import INSERT, UPDATE, Operation
@@ -57,6 +59,7 @@ from ..errors import (
     ProhibitedOperationError,
     UnrecoverableOperationalError,
 )
+from ..metrics import job_description
 from ..registry import (
     DEFAULT_ENGINE_SERVICE,
     DbapiService,
@@ -65,6 +68,9 @@ from ..registry import (
 )
 
 _ERROR_SCHEMA = "op string, key string, error string, n bigint"
+#: merge branch tags observed as counts in the write job (``untouched``
+#: rows are written but not counted)
+_COUNTED_OPS = ("inserted", "updated", "rejected-insert", "rejected-update")
 
 
 def _placeholder(paramstyle: str) -> str:
@@ -173,7 +179,9 @@ class InsertOrUpdate:
         )
         service = services.resolve(self.engine)
         if isinstance(service, PathService):
-            return self._write_path(df, spark, service)
+            mode = "snapshot" if self.snapshot else "path"
+            with job_description(spark, f"upsert:{mode}:merge"):
+                return self._write_path(df, spark, service)
         if isinstance(service, DbapiService):
             return self._write_dbapi(df, spark, service)
         raise TypeError(
@@ -545,60 +553,80 @@ class InsertOrUpdate:
     # ------------------------------------------------------------------
     def _merge_branches(
         self, target: DataFrame, prepared: DataFrame, target_cols: list[str]
-    ) -> tuple[DataFrame, DataFrame, DataFrame]:
-        """Shared MERGE branch construction (split incoming by
-        key-existence; update/untouched/insert unions; operation gating to
-        the dead-letter channel) — used by both path publish modes. On
-        Delta/Iceberg this whole construction is one MERGE INTO keyed on
-        the discriminant (idempotent, retry-safe at 100 TB). Returns
-        ``(merged, inserted, updated)``."""
+    ) -> DataFrame:
+        """The MERGE as one ``target FULL OUTER JOIN prepared USING
+        (discriminant)``, shared by both path publish modes. Each row is
+        tagged ``__op`` with its branch: ``untouched`` (target only),
+        ``inserted`` / ``rejected-insert`` (batch only) and ``updated`` /
+        ``rejected-update`` (both sides), by operation gating (O2h). A
+        rejected update keeps the target row, as the DBAPI backend does.
+        Updated rows keep the target's insert-only and ``created_at`` values
+        and take everything else from the incoming row (O2f/O2g). On
+        Delta/Iceberg this is one MERGE INTO keyed on the discriminant."""
         keys = list(self.discriminant)
-        tkeys = target.select(*keys).distinct()
-        incoming_upd = prepared.join(tkeys, keys, "left_semi")
-        incoming_ins = prepared.join(tkeys, keys, "left_anti")
+        keep_target = set(self.insert_only_fields) | {self.created_at_field}
+        in_t = F.col("t.__t").isNotNull()
+        in_p = F.col("p.__p").isNotNull()
+        allowed = self.allowed_operations
+        op = (
+            F.when(~in_p, F.lit("untouched"))
+            .when(~in_t, F.lit("inserted" if INSERT in allowed else "rejected-insert"))
+            .otherwise(F.lit("updated" if UPDATE in allowed else "rejected-update"))
+        )
 
-        if INSERT not in self.allowed_operations:
-            n_bad = incoming_ins.count()
-            if n_bad:
-                self.last_errors.append({"op": "INSERT", "key": "*", "n": n_bad})
-            incoming_ins = incoming_ins.limit(0)
-        if UPDATE not in self.allowed_operations:
-            n_bad = incoming_upd.count()
-            if n_bad:
-                self.last_errors.append({"op": "UPDATE", "key": "*", "n": n_bad})
-            incoming_upd = incoming_upd.limit(0)
+        def pick(c: str) -> F.Column:
+            if c in keys:
+                return F.col(c)  # USING key: coalesced over both sides
+            if c not in prepared.columns:
+                return F.col(f"t.{c}")
+            if c in keep_target:
+                return F.when(in_t, F.col(f"t.{c}")).otherwise(F.col(f"p.{c}"))
+            return F.when(op.isin("inserted", "updated"), F.col(f"p.{c}")).otherwise(
+                F.col(f"t.{c}")
+            )
 
-        # UPDATE branch: keep target's insert-only + created_at values,
-        # take everything else from the incoming row (O2f/O2g).
-        upd_keep_from_target = [
-            c
-            for c in target_cols
-            if c in set(self.insert_only_fields) | {self.created_at_field}
+        joined = target.withColumn("__t", F.lit(True)).alias("t").join(
+            prepared.withColumn("__p", F.lit(True)).alias("p"), keys, "full_outer"
+        )
+        return joined.select(*[pick(c).alias(c) for c in target_cols], op.alias("__op"))
+
+    def _observed(
+        self, target: DataFrame | None, prepared: DataFrame, target_cols: list[str]
+    ) -> tuple[DataFrame, Observation]:
+        """The frame to write — the merge, or on first load the whole batch
+        as inserts — with its branch counts observed inside the write job
+        (CollectMetrics in the result stage) instead of by extra count jobs
+        that would re-run the merge."""
+        tagged = (
+            self._merge_branches(target, prepared, target_cols)
+            if target is not None
+            else prepared.withColumn("__op", F.lit("inserted"))
+        )
+        obs = Observation()
+        op = F.col("__op")
+        counted = tagged.observe(
+            obs, *[F.count_if(op == tag).alias(tag) for tag in _COUNTED_OPS]
+        )
+        return counted.where(op != "rejected-insert").drop("__op"), obs
+
+    def _record(self, obs: Observation) -> None:
+        n = obs.get
+        self.last_stats = {"insert": n["inserted"], "update": n["updated"]}
+        self.last_errors = [
+            {"op": op, "key": "*", "n": n[tag]}
+            for op, tag in (("INSERT", "rejected-insert"), ("UPDATE", "rejected-update"))
+            if n[tag]
         ]
-        t = target.alias("t")
-        u = incoming_upd.alias("u")
-        updated = t.join(u, keys, "inner").select(
-            *[
-                (F.col(f"t.{c}") if c in upd_keep_from_target or c not in prepared.columns else F.col(f"u.{c}")).alias(c)
-                for c in target_cols
-            ]
-        )
-        untouched = target.join(prepared.select(*keys).distinct(), keys, "left_anti")
-        inserted = incoming_ins.select(
-            *[
-                (F.col(c) if c in prepared.columns else F.lit(None)).alias(c)
-                for c in target_cols
-            ]
-        )
-        merged = untouched.unionByName(updated).unionByName(inserted)
-        return merged, inserted, updated
 
-    def _fetch_back_path(self, prepared: DataFrame, tgt: DataFrame) -> DataFrame:
+    def _fetch_back_path(
+        self, prepared: DataFrame, spark: SparkSession, table_dir: str
+    ) -> DataFrame:
         """O2i for path targets: left-join generated/stored columns back
-        from the post-merge table by discriminant."""
+        from the post-merge table at ``table_dir`` by discriminant."""
         if not self.fetch_columns:
             return prepared
         keys = list(self.discriminant)
+        tgt = spark.read.parquet(table_dir)
         return prepared.join(
             tgt.select(*keys, *{*self.fetch_columns.values()} - set(keys)),
             keys,
@@ -612,38 +640,27 @@ class InsertOrUpdate:
             ],
         )
 
+    def _reject_first_load(self, prepared: DataFrame) -> DataFrame:
+        """First load with INSERT prohibited: nothing lands, every row is
+        a dead letter."""
+        self.last_errors = [{"op": "INSERT", "key": "*", "n": prepared.count()}]
+        return prepared.limit(0)
+
     def _write_path(
         self, df: DataFrame, spark: SparkSession, service: PathService
     ) -> DataFrame:
         path = service.table_path(self.table_name)
         if self.snapshot:
             return self._write_path_snapshot(df, spark, path)
-        exists = os.path.exists(path)
-        target = spark.read.parquet(path) if exists else None
+        target = spark.read.parquet(path) if os.path.exists(path) else None
         target_cols = target.columns if target is not None else df.columns
-
         prepared = self._prepare(df, list(target_cols))
-        keys = list(self.discriminant)
-        self.last_errors = []
+        if target is None and INSERT not in self.allowed_operations:
+            return self._reject_first_load(prepared)
 
-        if target is None:
-            if INSERT not in self.allowed_operations:
-                self.last_errors = [
-                    {"op": "INSERT", "key": "*", "n": prepared.count()}
-                ]
-                return prepared.limit(0)
-            prepared.write.mode("overwrite").parquet(path)
-            self.last_stats = {"insert": spark.read.parquet(path).count(), "update": 0}
-            return prepared
-
-        merged, inserted, updated = self._merge_branches(
-            target, prepared, list(target_cols)
-        )
-
-        # Counts must materialize BEFORE the swap — they read the old files.
-        n_ins, n_upd = inserted.count(), updated.count()
+        out, obs = self._observed(target, prepared, list(target_cols))
         tmp = path + ".__merge_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
+        out.write.mode("overwrite").parquet(tmp)
         # Swap keeping the old table recoverable: rename it aside first, so
         # a crash between the two renames leaves the previous version on
         # disk (at `old`) instead of no table at all. This in-place swap is
@@ -654,13 +671,12 @@ class InsertOrUpdate:
         # cluster image.
         old = path + ".__merge_old"
         shutil.rmtree(old, ignore_errors=True)
-        os.rename(path, old)
+        if target is not None:
+            os.rename(path, old)
         shutil.move(tmp, path)
         shutil.rmtree(old, ignore_errors=True)
-        self.last_stats = {"insert": n_ins, "update": n_upd}
-        if self.fetch_columns:
-            return self._fetch_back_path(prepared, spark.read.parquet(path))
-        return prepared
+        self._record(obs)
+        return self._fetch_back_path(prepared, spark, path)
 
     def _write_path_snapshot(
         self, df: DataFrame, spark: SparkSession, root: str
@@ -688,43 +704,17 @@ class InsertOrUpdate:
             )
             target_cols = target.columns if target is not None else df.columns
             prepared = self._prepare(df, list(target_cols))
-            self.last_errors = []
+            if target is None and INSERT not in self.allowed_operations:
+                return self._reject_first_load(prepared)
 
-            if target is None:
-                if INSERT not in self.allowed_operations:
-                    self.last_errors = [
-                        {"op": "INSERT", "key": "*", "n": prepared.count()}
-                    ]
-                    return prepared.limit(0)
-                try:
-                    name = snapshot_commit(
-                        spark, root, prepared, expect_version=None
-                    )
-                except SnapshotConflict as exc:
-                    last_exc = exc
-                    continue
-                committed = snapshot_read(spark, root, name)
-                self.last_stats = {"insert": committed.count(), "update": 0}
-                return self._fetch_back_path(prepared, committed)
-
-            merged, inserted, updated = self._merge_branches(
-                target, prepared, list(target_cols)
-            )
-            # Counts read the base snapshot's immutable files — safe to
-            # materialize either side of the commit, done before for parity
-            # with the in-place path.
-            n_ins, n_upd = inserted.count(), updated.count()
+            out, obs = self._observed(target, prepared, list(target_cols))
             try:
-                name = snapshot_commit(
-                    spark, root, merged, expect_version=base_version
-                )
+                name = snapshot_commit(spark, root, out, expect_version=base_version)
             except SnapshotConflict as exc:
                 last_exc = exc
                 continue
-            self.last_stats = {"insert": n_ins, "update": n_upd}
-            return self._fetch_back_path(
-                prepared, snapshot_read(spark, root, name)
-            )
+            self._record(obs)
+            return self._fetch_back_path(prepared, spark, os.path.join(root, name))
         raise last_exc if last_exc is not None else RuntimeError(
             f"snapshot upsert into {root} did not commit"
         )

@@ -405,3 +405,71 @@ def test_no_unpartitioned_window_over_unbounded_input(spark):
         f"{offenders} — use orderBy().limit(k) (TakeOrderedAndProject) "
         "below the window, or exempt with the input bound named"
     )
+
+
+# ---------------------------------------------------------------------------
+# Parquet MERGE sinks: one join per merge, counts observed in the write job
+# ---------------------------------------------------------------------------
+
+_JOIN = re.compile(
+    r"^\W*(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"
+    r"|BroadcastNestedLoopJoin|CartesianProduct)\b"
+)
+
+
+def _joins(plan: str) -> int:
+    return sum(bool(_JOIN.match(line)) for line in plan.splitlines())
+
+
+def _observed_in_result_stage(plan: str) -> bool:
+    """Every Exchange sits below the CollectMetrics node: the counters are
+    updated in the result stage, where accumulator updates apply once per
+    successful task, so a retried task cannot double-count."""
+    def indent(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    lines = plan.splitlines()
+    at = next(i for i, ln in enumerate(lines) if "CollectMetrics" in ln)
+    below = set()
+    for i in range(at + 1, len(lines)):
+        if indent(lines[i]) <= indent(lines[at]):
+            break
+        below.add(i)
+    return all(i in below for i, ln in enumerate(lines) if "Exchange" in ln)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_upsert_merge_is_one_scan_one_join(spark, tmp_path):
+    from bonobo_sqlalchemy_spark import InsertOrUpdate
+
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame(
+        [(i, f"v{i}") for i in range(20)], "id int, value string"
+    ).write.parquet(path)
+    target = spark.read.parquet(path)
+    sink = InsertOrUpdate("t")
+    batch = spark.createDataFrame([(2, "B"), (30, "new")], "id int, value string")
+    out, _ = sink._observed(target, sink._prepare(batch, target.columns), target.columns)
+    plan = _plan(out)
+    assert plan.count("FileScan parquet") == 1, plan  # the target, read once
+    assert _joins(plan) == 1, plan
+    assert "FullOuter" in plan
+    assert _observed_in_result_stage(plan), plan
+
+
+def test_scd2_merge_is_one_join(spark, tmp_path):
+    from bonobo_sqlalchemy_spark.operators.scd2 import Scd2Sink
+
+    path = str(tmp_path / "dim.parquet")
+    sink = Scd2Sink(keys=["id"])
+    base = spark.createDataFrame([(i, f"v{i}") for i in range(20)], "id int, value string")
+    sink.write(base, spark, path, "2024-01-01 00:00:00")
+    batch = spark.createDataFrame([(2, "B"), (30, "new")], "id int, value string")
+    merged, _, _ = sink._merge(spark.read.parquet(path), batch, path, "2024-01-02 00:00:00")
+    plan = _plan(merged)
+    assert _joins(plan) == 1, plan
+    assert "FullOuter" in plan
+    assert _observed_in_result_stage(plan), plan

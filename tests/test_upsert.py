@@ -313,6 +313,26 @@ def test_path_target_update_only_gating(spark, tmp_path):
     assert final.where("id = 3").collect()[0].value == "upd"
 
 
+@pytest.mark.parametrize("snapshot", [False, True], ids=["in_place", "snapshot"])
+def test_path_target_insert_only_gating_keeps_rejected_rows(spark, tmp_path, snapshot):
+    """An insert-only upsert must leave target rows whose keys it may not
+    update as they were (the DBAPI backend and writers.py:92-95 do), and
+    report the rejected update in the dead-letter channel."""
+    from bonobo_sqlalchemy_spark.operators.snapshot import snapshot_read
+
+    svc = {"sqlalchemy.engine": PathService(str(tmp_path))}
+    base = spark.createDataFrame([(1, "a"), (2, "b")], "id int, value string")
+    run(Graph(base, InsertOrUpdate("t", snapshot=snapshot)), spark, services=svc)
+    sink = InsertOrUpdate("t", allowed_operations=(INSERT,), snapshot=snapshot)
+    batch = spark.createDataFrame([(2, "B"), (3, "c")], "id int, value string")
+    run(Graph(batch, sink), spark, services=svc)
+    assert sink.last_stats == {"insert": 1, "update": 0}
+    assert sink.last_errors == [{"op": "UPDATE", "key": "*", "n": 1}]
+    root = str(tmp_path / "t.parquet")
+    final = snapshot_read(spark, root) if snapshot else spark.read.parquet(root)
+    assert sorted(map(tuple, final.collect())) == [(1, "a"), (2, "b"), (3, "c")]
+
+
 def test_order_col_keep_last_is_shuffle_invariant(spark, tmp_path):
     """With order_col, 'last row wins' is defined by the declared column —
     identical results regardless of input partitioning (the default
